@@ -5,9 +5,10 @@ A from-scratch reimplementation of the data-processing capabilities of
 file:line) as a batch DataFrame pipeline over an Iceberg-style table of
 interleaved text + media documents:
 
-* per-format extraction dispatch (html / pdf / txt / docx / image / uns) in
-  vectorized pandas kernels driven by ``mapInPandas`` — no per-row Python UDFs
-  at the Spark level (reference: app/services/bytes_xtractor.py:50-88);
+* per-format extraction dispatch (html / pdf / txt / docx / image / uns and
+  the optional rtf / xls / email / msg) in one Arrow kernel driven by
+  ``mapInArrow`` — no per-row Python UDFs at the Spark level (reference:
+  app/services/bytes_xtractor.py:50-88);
 * the reference's text normalization chain, bug-for-bug
   (app/services/bytes_xtractor.py:23-39);
 * search semantics — FTS term match, date-range / ILIKE predicates, rank +

@@ -1,9 +1,10 @@
 """Pure (non-Spark) extraction kernels.
 
-Every kernel here is a plain function over Python scalars or pandas Series,
-unit-testable without a SparkSession. The Spark pipeline wraps them in
-``mapInPandas`` (see ocr_search_spark.pipeline.extract); the scalar variants
-in ``reference_impl`` are the golden-truth oracle for span-sequence equality.
+Every kernel here is a plain function over Python scalars or Arrow arrays,
+unit-testable without a SparkSession. The Spark pipeline calls the batch
+dispatch ``extract_texts`` inside one ``mapInArrow`` kernel (see
+ocr_search_spark.pipeline.extract); the scalar variants in
+``reference_impl`` are the golden-truth oracle for span-sequence equality.
 """
 
 from .normalize import preprocess_text_layer, normalize_series

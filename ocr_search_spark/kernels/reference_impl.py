@@ -9,7 +9,8 @@ vectorized Spark pipeline must produce byte-identical span sequences
 
 Kept intentionally independent of the vectorized batch path where possible:
 normalization here is the scalar ``preprocess_text_layer`` (the vectorized
-path uses the pandas chain), so tests cross-check the two formulations.
+path uses the Arrow/RE2 chain ``normalize_arrow``), so tests cross-check
+the two formulations.
 """
 
 from __future__ import annotations
@@ -27,30 +28,37 @@ from .xls_extract import xls_any_to_text
 
 
 def extract_span_text(kind: str, text: str, media_ref: str) -> str:
-    """Extract + normalize a single span, scalar path."""
+    """Extract + normalize a single span, scalar path. A kernel that raises
+    yields "" (P5: extractors swallow errors and return "")."""
     kind = kind or "uns"
     text = text or ""
-    if kind in ("txt", "docx"):
-        raw = text
-    elif kind == "pdf":
-        raw = extract_pdf_page_text(text)
-    elif kind == "html":
-        raw = html_to_text(text)
-    elif kind == "image":
-        raw = ocr_stub_text(media_ref or "")
-    elif kind == "rtf":
-        raw = rtf_to_text(text)
-    elif kind == "xls":
-        raw = xls_any_to_text(text)
-    elif kind == "email":
-        # the reference's combined extractor sniffs CFB containers
-        # (a user may hand a .msg file the .eml route, email.py:45-50)
-        raw = eml_or_msg_to_text(text)
-    elif kind == "msg":
-        raw = msg_to_text(text)
-    else:  # uns + unknown kinds (bytes_xtractor.py:70)
+    try:
+        raw = _extract_raw(kind, text, media_ref)
+    except Exception:
         raw = ""
     return preprocess_text_layer(raw)
+
+
+def _extract_raw(kind: str, text: str, media_ref: str) -> str:
+    if kind in ("txt", "docx"):
+        return text
+    if kind == "pdf":
+        return extract_pdf_page_text(text)
+    if kind == "html":
+        return html_to_text(text)
+    if kind == "image":
+        return ocr_stub_text(media_ref or "")
+    if kind == "rtf":
+        return rtf_to_text(text)
+    if kind == "xls":
+        return xls_any_to_text(text)
+    if kind == "email":
+        # the reference's combined extractor sniffs CFB containers
+        # (a user may hand a .msg file the .eml route, email.py:45-50)
+        return eml_or_msg_to_text(text)
+    if kind == "msg":
+        return msg_to_text(text)
+    return ""  # uns + unknown kinds (bytes_xtractor.py:70)
 
 
 def extract_document_spans(spans: list[dict[str, Any]]) -> list[dict[str, Any]]:

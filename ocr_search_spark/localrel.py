@@ -29,6 +29,12 @@ def strings_df(spark, values, col: str = "value") -> DataFrame:
 
 
 def _lit(s: str) -> str:
+    """``s`` as a single-quoted Spark SQL string literal, with backslash and
+    quote backslash-escaped. Assumes the default
+    ``spark.sql.parser.escapedStringLiterals=false``; with it set to true,
+    the escapes are kept verbatim and every escaped value comes back with
+    its backslashes. User search terms reach it through :func:`strings_df`
+    (search/engine.py), so this is the one escaper to keep correct."""
     return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 

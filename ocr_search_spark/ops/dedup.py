@@ -732,6 +732,10 @@ def connected_components_labels(
     the shallow clusters that dominate near-dup graphs (round-1
     checkpoint, round-2 checkpoint, one count), down from 5.
     """
+    if max_iters < 2:
+        # round 1 is unrolled without a convergence check, so one counted
+        # round must follow it even when there are no edges
+        raise ValueError(f"max_iters must be >= 2, got {max_iters}")
     # no .distinct() on edges: callers hand over already-distinct pairs
     # (verified_near_dup_pairs ends in a distinct candidate set), and the
     # groupBy-min below absorbs any stragglers — one less shuffle/job in a

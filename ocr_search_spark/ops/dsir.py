@@ -115,53 +115,6 @@ def dsir_bucket_counts(
     )
 
 
-def dsir_weight_table(
-    target: DataFrame,
-    raw: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Per-bucket half-bit importance weights plus the shared totals:
-    (bucket, lambda_hb) for every bucket occupied in either corpus, and
-    the single-row (tt, tr, delta_hb) totals frame.
-
-    Returns a pair ``(weights, totals)`` of DataFrames.
-    """
-    ct = dsir_bucket_counts(target, text_col, n_buckets).withColumnRenamed(
-        "c", "ct"
-    )
-    cr = dsir_bucket_counts(raw, text_col, n_buckets).withColumnRenamed(
-        "c", "cr"
-    )
-    weights = (
-        ct.join(cr, "bucket", "full_outer")
-        .select(
-            "bucket",
-            (
-                _hb(F.coalesce("ct", F.lit(0)) + 1)
-                - _hb(F.coalesce("cr", F.lit(0)) + 1)
-            ).alias("lambda_hb"),
-        )
-    )
-    # totals are the SUMS of the bucket counts — no extra corpus pass
-    # (an explode-and-count of each corpus again would double the fit
-    # cost for a value the counts tables already contain)
-    tt = ct.agg(F.coalesce(F.sum("ct"), F.lit(0)).alias("tt"))
-    tr = cr.agg(F.coalesce(F.sum("cr"), F.lit(0)).alias("tr"))
-    totals = (
-        tt.crossJoin(tr)
-        .select(
-            "tt",
-            "tr",
-            (
-                _hb(F.col("tr") + F.lit(n_buckets))
-                - _hb(F.col("tt") + F.lit(n_buckets))
-            ).alias("delta_hb"),
-        )
-    )
-    return weights, totals
-
-
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame | None,

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..localrel import string_int_df
+
 
 def funnel(
     events: DataFrame,
@@ -63,7 +65,6 @@ def funnel(
         raise ValueError(f"funnel steps must be distinct, got {steps!r}")
     from pyspark.sql import Window
 
-    spark = events.sparkSession
     frontier = (
         events.filter(F.col(type_col) == steps[0])
         .groupBy(user_col)
@@ -84,13 +85,13 @@ def funnel(
         leg = f.select(F.lit(i).alias("step"), F.col(user_col))
         tagged = leg if tagged is None else tagged.unionByName(leg)
     counts = tagged.groupBy("step").agg(F.count("*").alias("__c"))
-    # explicit (step, name) VALUES pairs — a JVM-local relation with the
+    # explicit (name, step) VALUES pairs — a JVM-local relation with the
     # step index as data (never derived from row order/partitioning)
-    def _lit(s: str) -> str:
-        return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    rows = ", ".join(f"({i + 1}, {_lit(s)})" for i, s in enumerate(steps))
-    steps_rel = spark.sql(f"SELECT * FROM VALUES {rows} AS t(step, event_type)")
+    steps_rel = string_int_df(
+        events.sparkSession,
+        ((s, i) for i, s in enumerate(steps, start=1)),
+        "event_type, step",
+    )
     w = Window.orderBy("step").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

@@ -44,18 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 
-def _epoch_s(df: DataFrame, col: str):
-    """Column as epoch seconds (long). Timestamp columns (TZ or NTZ —
-    NTZ→LTZ is identity under the UTC session timezone) go through
-    unix_micros; numeric columns are cast directly."""
-    dt = df.schema[col].dataType
-    if isinstance(dt, (TimestampType, TimestampNTZType)):
-        return F.floor(
-            F.unix_micros(F.col(col).cast("timestamp_ltz")) / F.lit(1_000_000)
-        ).cast("long")
-    return F.col(col).cast("long")
-
-
 def _epoch_us(df: DataFrame, col: str):
     """Column as epoch MICROseconds (long) — full precision, no flooring.
     Numeric columns are taken as (possibly fractional) seconds."""

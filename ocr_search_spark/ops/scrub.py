@@ -38,15 +38,6 @@ URL_PATTERN = r"https?://[a-z0-9.-]+(?:/[^\s]*)?"
 DOMAIN_PATTERN = r"https?://([a-z0-9.-]+)"
 
 
-def pii_counts(col: Column | str) -> dict[str, Column]:
-    """Per-type PII occurrence counts for a text column (codegen'd)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return {
-        f"n_{name}": F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0)))
-        for name, pat in PII_PATTERNS.items()
-    }
-
-
 def redact_pii(
     df: DataFrame,
     text_col: str,

@@ -16,10 +16,12 @@ Scale design (100 TB / 10^12-doc framing):
   extraction itself is a narrow ``mapInArrow`` and the output write is
   pipelined into the same stage.
 * **Arrow-native kernel** — the nested ``array<struct>`` spans column is
-  flattened zero-copy with pyarrow (``ListArray.flatten``); only the three
-  small string child arrays cross into pandas for the vectorized kernels.
-  (A ``mapInPandas`` formulation converts every span to a Python dict —
-  measured 5-10× slower end-to-end at sf0.1.)
+  flattened zero-copy with pyarrow (``ListArray.flatten``) and its string
+  child arrays go straight into the Arrow dispatch kernel; the normalized
+  text array it returns becomes the output struct's ``text`` field. Only
+  the non-passthrough kinds' rows become Python strings, for their scalar
+  kernels. (A ``mapInPandas`` formulation converts every span to a Python
+  dict — measured 5-10× slower end-to-end at sf0.1.)
 * **No driver round-trips** — nothing is collected; lineage/audit metrics are
   aggregated distributed (see checkpoint.py).
 * **Arrow batch bounds** — per-batch memory is bounded by
@@ -79,14 +81,12 @@ def add_partition_salt(df: DataFrame, num_partitions: int) -> DataFrame:
 
 def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     """Extract one Arrow batch of whole documents, Arrow-native."""
-    cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    spans = cols["spans"]
+    spans = batch.column("spans")
     if spans.null_count:
         spans = pc.fill_null(spans, [])
 
     flat = spans.flatten()  # StructArray, respects list offsets (zero-copy)
-    lens = pc.list_value_length(spans).to_numpy(zero_copy_only=False)
-    lens = np.nan_to_num(lens, nan=0).astype("int64")
+    lens = pc.list_value_length(spans).to_numpy().astype("int64")
     offsets = np.zeros(len(lens) + 1, dtype="int64")
     np.cumsum(lens, out=offsets[1:])
 
@@ -105,9 +105,7 @@ def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         take = pa.array(perm)
         kind, text, media = kind.take(take), text.take(take), media.take(take)
 
-    kind_pd = kind.to_pandas()
-    extracted, failed = extract_texts(kind_pd, text.to_pandas(), media.to_pandas())
-    failed_np = failed.to_numpy(dtype="int64")
+    extracted, failed = extract_texts(kind, text, media)
 
     # falsy kind (null or "") normalizes to 'uns', matching the scalar path
     # (bytes_xtractor.py:70 — unknown dispatch falls through to 'uns')
@@ -117,7 +115,7 @@ def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     out_struct = pa.StructArray.from_arrays(
         [
             kind_out,
-            pa.array(extracted.tolist(), type=pa.string()),
+            extracted,
             pc.fill_null(media, ""),
             pa.array(order_in_doc.astype("int32")),
         ],
@@ -127,19 +125,11 @@ def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         pa.array(offsets, type=pa.int64()), out_struct
     ).cast(pa.list_(_OUT_SPAN_TYPE))
 
-    n_failures = np.zeros(len(lens), dtype="int64")
-    if len(failed_np):
-        np.add.at(n_failures, parent, failed_np)
-
-    part_id = (
-        cols["part_id"].cast(pa.int32())
-        if "part_id" in cols
-        else pa.array(np.zeros(len(lens), dtype="int32"))
-    )
+    n_failures = np.bincount(parent, weights=failed, minlength=len(lens))
     return pa.RecordBatch.from_arrays(
         [
-            cols["doc_id"],
-            part_id,
+            batch.column("doc_id"),
+            batch.column("part_id").cast(pa.int32()),
             pa.array(lens.astype("int32")),
             pa.array(n_failures.astype("int32")),
             out_spans,

@@ -86,16 +86,6 @@ def read_table(spark: SparkSession, identifier: str) -> DataFrame:
     return spark.read.parquet(identifier)
 
 
-def table_exists(spark: SparkSession, identifier: str) -> bool:
-    if _table_format() == "iceberg":
-        return spark.catalog.tableExists(identifier)
-    try:
-        spark.read.parquet(identifier).schema
-        return True
-    except Exception:
-        return False
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,

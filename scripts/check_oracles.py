@@ -13,8 +13,9 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (

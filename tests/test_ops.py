@@ -215,6 +215,19 @@ class TestConnectedComponents:
         labels = {r.id: r.label for r in connected_components_labels(df).collect()}
         assert set(labels.values()) == {"c000"}  # default budget converges
 
+    def test_max_iters_below_two_rejected(self, spark):
+        """Round 1 is unrolled without a convergence check, so
+        max_iters=1 could never return; it is rejected up front, even for
+        an empty edge set."""
+        import pytest as _pytest
+
+        from ocr_search_spark.ops.dedup import connected_components_labels
+
+        df = spark.createDataFrame([], "a_id string, b_id string")
+        for bad in (0, 1):
+            with _pytest.raises(ValueError, match="max_iters"):
+                connected_components_labels(df, max_iters=bad)
+
     def test_deep_chain_converges_in_log_rounds(self, spark):
         """Pointer halving: a 100-node path (diameter 99) must converge
         well within O(log d) rounds — 12 iterations, where plain min-label

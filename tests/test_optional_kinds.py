@@ -313,15 +313,19 @@ class TestDispatchWiring:
             ("xls", json.dumps({"sheets": {"A": [["1", "2"]]}}), ""),
             ("email", TestEmail.EML, ""),
             ("msg", _msg_fixture().decode("latin-1"), ""),
+            # truncated header: both email parsers raise IndexError
+            ("email", "To: a@", ""),
         ]
         got, failed = extract_texts(
             pd.Series([r[0] for r in rows]),
             pd.Series([r[1] for r in rows]),
             pd.Series([r[2] for r in rows]),
         )
-        assert list(got) == [extract_span_text(*r) for r in rows]
-        assert list(failed) == [False, False, False, False]
+        got = got.to_pylist()
+        assert got == [extract_span_text(*r) for r in rows]
+        assert list(failed) == [False, False, False, False, True]
         assert got[0] == "Hello\nworld" or got[0] == "Hello world"
+        assert got[-1] == ""
 
 
 def build_xlsx(sheets: dict[str, list[list]], shared_first_cell: bool = True) -> bytes:

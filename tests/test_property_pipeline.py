@@ -119,3 +119,23 @@ def test_null_spans_row_treated_as_empty():
     spans = dict(zip(out.column(0).to_pylist(), out.column(4).to_pylist()))
     assert spans["a"] == []
     assert spans["b"][0]["text"] == "x"
+
+
+def test_raising_kernel_fails_one_span_not_the_batch():
+    # "To: a@" makes the email header parser raise IndexError; the span
+    # yields "" and counts as one failure, and the rest of the batch stands
+    spans = [
+        {"kind": "txt", "text": "kept", "media_ref": "", "offset": 0},
+        {"kind": "email", "text": "To: a@", "media_ref": "", "offset": 1},
+    ]
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(["a", "b"], type=pa.string()),
+            pa.array([spans, spans[:1]], type=pa.list_(_IN_SPAN)),
+            pa.array([0, 0], type=pa.int32()),
+        ],
+        names=["doc_id", "spans", "part_id"],
+    )
+    out = _extract_arrow_batch(batch)
+    assert out.column(3).to_pylist() == [1, 0]
+    assert [s["text"] for s in out.column(4).to_pylist()[0]] == ["kept", ""]
