@@ -1852,9 +1852,7 @@ def q_semdedup(spark, sf_dir):
     # oracle operating point
     k = max(8, emb.count() // 64)
     cents = ivf_centroids_from_sample(emb, k=k)
-    # join assignment strategy: bit-identical, k-independent plan —
-    # 5.7 s vs 9.8 s at sf0.1 (literal-expression compile dominated)
-    return semdedup(emb, cents, threshold=0.42, method="join").select("vec_id")
+    return semdedup(emb, cents, threshold=0.42).select("vec_id")
 
 
 def q_semdedup_cluster_sizes(spark, sf_dir):
@@ -1870,9 +1868,7 @@ def q_semdedup_cluster_sizes(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     k = max(8, emb.count() // 64)  # the q_semdedup k ∝ n rule
     cents = ivf_centroids_from_sample(emb, k=k)
-    pairs = semdedup_pairs(
-        emb, cents, threshold=0.42, method="join"
-    ).select("a_id", "b_id")
+    pairs = semdedup_pairs(emb, cents, threshold=0.42).select("a_id", "b_id")
     labels = connected_components_labels(pairs)
     return (
         labels.groupBy("label")
@@ -2717,12 +2713,8 @@ def q_ann_recall(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = ivf_centroids_from_sample(emb, k=16)
-    # join strategy: bit-identical to the literal path, but the plan is
-    # k-independent — measured 0.8 s vs 5.0 s at sf0.1 (the literal
-    # path's 16x64-literal compile dominates at audit scale)
     return ann_recall(
-        emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4,
-        method="join",
+        emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4
     )
 
 
@@ -2763,17 +2755,9 @@ def q_ivf_pq_topk(spark, sf_dir):
 
 
 def q_ann_ivf_topk_join(spark, sf_dir):
-    """IVF probe search through the broadcast-join strategy (the
-    production-cell-count shape: centroids as data, struct-max argmax,
-    k-independent plan) — bit-identical to the literal path, so it shares
-    ann_ivf_topk's oracle."""
-    from ocr_search_spark.ops.similarity import ivf_centroids_from_sample, ivf_search
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_centroids_from_sample(emb, k=16)
-    return ivf_search(
-        emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4, method="join"
-    )
+    """The same call as ann_ivf_topk, so it shares ann_ivf_topk's oracle;
+    kept registered so the query and oracle sets stay stable."""
+    return q_ann_ivf_topk(spark, sf_dir)
 
 
 def q_media_features(spark, sf_dir):
@@ -5567,8 +5551,7 @@ def oracle_sql() -> dict[str, str]:
         "ann_ivf_topk": _ann_ivf_oracle_sql(),
         "pq_adc_topk": _pq_adc_oracle_sql(),
         "ivf_pq_topk": _ivf_pq_oracle_sql(),
-        # the join strategy is bit-identical to the literal strategy by
-        # construction — same oracle
+        # the same call as ann_ivf_topk — same oracle
         "ann_ivf_topk_join": _ann_ivf_oracle_sql(),
         "ann_recall": _ann_recall_oracle_sql(),
         "sq_topk": _SQ_TOPK_SQL
@@ -7369,8 +7352,8 @@ def _ivf_pq_oracle_sql(
 
 def _ann_ivf_oracle_sql(k_cent: int = 16, n_probe: int = 4, k: int = 10) -> str:
     """Full IVF probe-search oracle: centroid selection (smallest md5(id)),
-    nearest-cell assignment (ties → larger cid, matching array_max struct
-    ordering in ivf_assign), per-query probe lists, exact re-rank."""
+    nearest-cell assignment (ties → larger cid, matching the struct-max
+    in ivf_assign), per-query probe lists, exact re-rank."""
     return f"""
         WITH cent AS (
           SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS cid,

@@ -85,29 +85,6 @@ def cosine_topk(
     )
 
 
-def _nearest_cell(vec_col: str, centroids: list[tuple[int, list[float]]]):
-    """Struct (cos, cid) of the nearest centroid for a vector column.
-
-    Linear-size expression: one struct per centroid, array_max picks the
-    best (struct ordering: cos first, centroid id as tiebreak). An
-    iterative when-chain would nest the accumulated expression and double
-    the tree per centroid — 2^k blowup that OOMs the analyzer at k=16."""
-    cells = []
-    for cid, vec in centroids:
-        lit = F.array(*[F.lit(float(v)) for v in vec])
-        cos = _dot(F.col(vec_col), lit) / (_norm(F.col(vec_col)) * _norm(lit))
-        cells.append(F.struct(cos.alias("cos"), F.lit(cid).alias("cid")))
-    return F.array_max(F.array(*cells))
-
-
-#: above this cell count the literal-expression assignment switches to the
-#: broadcast-join path: a k-wide literal projection is O(k·dim) PLAN SIZE
-#: (analysis cost per query compilation), fine at coarse k≈16–64 but the
-#: wrong shape at production cell counts (e.g. 65k cells for a 10^12-vector
-#: IVF), where centroids must be data, not expression trees.
-_LITERAL_CELL_LIMIT = 64
-
-
 class _NonLiteral(Exception):
     """A driver value (non-finite float) a SQL literal cannot express."""
 
@@ -156,16 +133,13 @@ def _ivf_assign_join(
     vec_col: str,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Broadcast-join nearest-centroid assignment (scale path).
+    """Broadcast-join nearest-centroid assignment.
 
-    Corpus ⋈ broadcast(centroids) → per-pair cosine → lexicographic
-    ``max(struct(cos, cid))`` per vector. The struct-max tie-break (best
-    cos, then largest cid) is identical to the literal path's
-    ``array_max(array(struct(cos, cid)))``, and the cosine fold order is
-    the same ``_dot``/``_norm`` left fold, so the two paths are
-    bit-identical. Map-side partial aggregation collapses the k candidate
-    rows per vector before the shuffle, so the exchange carries one row
-    per vector regardless of k.
+    Corpus ⋈ broadcast(centroids) → per-pair cosine (the ``_dot``/``_norm``
+    left fold) → lexicographic ``max(struct(cos, cid))`` per vector, so
+    ties go to the largest cid. Map-side partial aggregation collapses the
+    k candidate rows per vector before the shuffle, so the exchange
+    carries one row per vector regardless of k.
     """
     cent = centroids_to_df(df.sparkSession, centroids)
     pairs = df.select(
@@ -200,32 +174,16 @@ def ivf_assign(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> DataFrame:
     """IVF coarse quantization: assign every vector to its nearest centroid.
 
-    Returns (id, centroid_id, cos). Two bit-identical physical strategies:
-
-    * ``literal`` — centroids broadcast as literal expression trees; one
-      corpus scan, zero shuffle. Best for coarse k (≤ _LITERAL_CELL_LIMIT).
-    * ``join`` — centroids as a broadcast DataFrame, struct-max argmax via
-      partial aggregation; plan size independent of k. The production
-      shape for large cell counts.
-
-    ``auto`` picks by cell count. Zero-norm vectors are unassignable
-    (cosine undefined) and are excluded.
+    Returns (id, centroid_id, cos). Centroids are a broadcast DataFrame
+    and the argmax is a struct-max partial aggregation, so the plan size
+    is independent of the cell count (see :func:`_ivf_assign_join`).
+    Zero-norm vectors are unassignable (cosine undefined) and are
+    excluded.
     """
-    df = _nonzero(df, vec_col)
-    if method == "auto":
-        method = "literal" if len(centroids) <= _LITERAL_CELL_LIMIT else "join"
-    if method == "join":
-        return _ivf_assign_join(df, centroids, id_col, vec_col)
-    best = _nearest_cell(vec_col, centroids)
-    return df.select(
-        F.col(id_col).alias("id"),
-        best["cid"].alias("centroid_id"),
-        F.round(best["cos"], 6).alias("cos"),
-    )
+    return _ivf_assign_join(_nonzero(df, vec_col), centroids, id_col, vec_col)
 
 
 def ivf_refine(
@@ -234,14 +192,14 @@ def ivf_refine(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd refinement of the IVF coarse centroids.
 
-    Each iteration is one corpus scan: nearest-cell assignment inline (no
-    join back), then per-cell per-dimension means as ``dim`` map-side-
-    combinable avg aggregates — the shuffle carries k×dim partial sums, the
-    driver holds k×dim floats. Empty cells keep their previous centroid
+    Each iteration is one corpus scan: nearest-cell assignment carrying
+    the vector through the argmax (no join back), then per-cell
+    per-dimension means as ``dim`` map-side-combinable avg aggregates —
+    the shuffle carries k×dim partial sums, the driver holds k×dim
+    floats. Empty cells keep their previous centroid
     (standard Lloyd degeneracy handling). Assignment ties and iteration
     order are deterministic; the per-dim mean is floating-point (partial
     order), which only perturbs internal probe geometry — search results
@@ -250,19 +208,11 @@ def ivf_refine(
     if not centroids:
         raise ValueError("need at least one centroid")
     df = _nonzero(df, vec_col)  # cosine assignment undefined at norm 0
-    if method == "auto":
-        method = "literal" if len(centroids) <= _LITERAL_CELL_LIMIT else "join"
     dim = len(centroids[0][1])
     for _ in range(iters):
-        if method == "join":
-            assigned = _ivf_assign_join(
-                df, centroids, id_col, vec_col, keep_vec=True
-            ).select(F.col("centroid_id").alias("cid"), "v")
-        else:
-            assigned = df.select(
-                _nearest_cell(vec_col, centroids)["cid"].alias("cid"),
-                F.col(vec_col).alias("v"),
-            )
+        assigned = _ivf_assign_join(
+            df, centroids, id_col, vec_col, keep_vec=True
+        ).select(F.col("centroid_id").alias("cid"), "v")
         aggs = [F.avg(F.element_at("v", i + 1)).alias(f"c{i}") for i in range(dim)]
         rows = assigned.groupBy("cid").agg(*aggs).collect()
         new = dict(centroids)
@@ -284,11 +234,8 @@ def ivf_centroids_from_sample(
     and recomputable in any engine with md5 — the DuckDB oracle rebuilds the
     same centroid set in SQL). Returns driver-side [(centroid_id, vector)].
     """
-    rows = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.encode(F.col("id").cast("string"), "utf-8")), F.col("id"))
-        .limit(k)
-        .collect()
+    rows = _md5_seeds(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), k
     )
     return [(i, list(map(float, r.v))) for i, r in enumerate(rows)]
 
@@ -299,8 +246,7 @@ def _ivf_probes_join(
     n_probe: int,
 ) -> DataFrame:
     """Per-query probe cells via broadcast join + window rank — plan size
-    independent of the cell count (twin of the literal probe expression;
-    same (ccos desc, cid desc) tie-break as reverse(array_sort(structs)))."""
+    independent of the cell count; ties go (ccos desc, cid desc)."""
     cent = centroids_to_df(q.sparkSession, centroids)
     ccos = _dot(F.col("qvec"), F.col("cvec")) / (
         _norm(F.col("qvec")) * _norm(F.col("cvec"))
@@ -325,50 +271,28 @@ def ivf_search(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> DataFrame:
     """IVF probe search: queries visit only their ``n_probe`` nearest cells.
 
     Corpus side: one assignment pass (in production, a materialized
     partitioned table — the scan then prunes to probed cells). Query side:
-    per-query probe list, joined on cell id, exact cosine re-rank, top-k.
-    ``method`` threads through to :func:`ivf_assign` and the probe-list
-    strategy (``literal`` expression trees vs ``join`` on a broadcast
-    centroid DataFrame — bit-identical results; join is the large-k shape).
-    Zero-norm vectors are excluded on both sides (cosine undefined).
+    per-query probe list (:func:`_ivf_probes_join`), joined on cell id,
+    exact cosine re-rank, top-k. Zero-norm vectors are excluded on both
+    sides (cosine undefined).
     """
     corpus = _nonzero(corpus, vec_col)
     queries = _nonzero(queries, vec_col)
-    if method == "auto":
-        method = "literal" if len(centroids) <= _LITERAL_CELL_LIMIT else "join"
     assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
     ).join(
-        ivf_assign(corpus, centroids, id_col, vec_col, method=method)
+        ivf_assign(corpus, centroids, id_col, vec_col)
         .withColumnRenamed("id", "neighbor_id")
         .select("neighbor_id", "centroid_id"),
         "neighbor_id",
     )
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    if method == "join":
-        probes = _ivf_probes_join(q, centroids, n_probe)
-    else:
-        probe_rows = []
-        for cid, vec in centroids:
-            lit = F.array(*[F.lit(float(v)) for v in vec])
-            cos = _dot(F.col("qvec"), lit) / (_norm(F.col("qvec")) * _norm(lit))
-            # ccos first: default struct ordering sorts by it
-            probe_rows.append(
-                F.struct(cos.alias("ccos"), F.lit(cid).alias("centroid_id"))
-            )
-        probes = q.select(
-            "query_id",
-            "qvec",
-            F.explode(
-                F.slice(F.reverse(F.array_sort(F.array(*probe_rows))), 1, n_probe)
-            ).alias("p"),
-        ).select("query_id", "qvec", F.col("p.centroid_id").alias("centroid_id"))
+    probes = _ivf_probes_join(q, centroids, n_probe)
 
     cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -695,8 +619,9 @@ def _lattice_quantize(df: DataFrame, id_col: str, vec_col: str, scale: int):
 
 
 def _md5_seeds(q: DataFrame, k: int):
-    """The k rows of (id, qv) with the smallest md5(id) — the shared
-    deterministic seeding convention (ivf_centroids_from_sample /
+    """The k rows of ``q`` (which has an ``id`` column) with the smallest
+    md5(id) — the shared deterministic seeding convention
+    (ivf_centroids_from_sample / ivf_pq_seeds_from_sample /
     pq_codebooks_from_sample / both lattice trainers and their
     oracles)."""
     return (
@@ -706,6 +631,14 @@ def _md5_seeds(q: DataFrame, k: int):
         .limit(int(k))
         .collect()
     )
+
+
+#: kmeans_train's cell bound: its argmin is one k-wide literal projection,
+#: O(k·dim) PLAN SIZE (analysis cost per query compilation) — fine at coarse
+#: k≈16–64 but the wrong shape at production cell counts (e.g. 65k cells for
+#: a 10^12-vector IVF), where centroids must be data, not expression trees
+#: (the broadcast-join assignment of :func:`ivf_assign`).
+_LITERAL_CELL_LIMIT = 64
 
 
 def kmeans_train(
@@ -736,9 +669,8 @@ def kmeans_train(
 
     Scale shape: the canonical distributed k-means. Inputs are
     quantized once and localCheckpoint-ed; each iteration is ONE scan
-    with a map-side literal argmin (k·dim expression, the
-    _nearest_cell pattern — k ≤ 64 enforced, the broadcast-join
-    assignment is the shape above that) followed by ONE map-side-
+    with a map-side literal argmin (one k·dim expression — k ≤
+    _LITERAL_CELL_LIMIT enforced) followed by ONE map-side-
     combinable shuffle of (cid, dim) partial sums — k·dim rows reach
     the driver per round, never vectors. Driver state is k·dim
     integers, exactly what every k-means driver loop holds. Init is
@@ -834,20 +766,7 @@ def pq_codebooks_from_sample(
     Returns driver-side [(s, code, subvector)], m·k entries — tiny by
     construction (k ≤ 256 codewords in practice), the broadcast side of
     every PQ join."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    rows = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.encode(F.col("id").cast("string"), "utf-8")), F.col("id"))
-        .limit(k)
-        .collect()
-    )
-    out = []
-    for s in range(m):
-        for c, r in enumerate(rows):
-            out.append((s, c, [float(x) for x in r.v[s * sub : (s + 1) * sub]]))
-    return out
+    return ivf_pq_seeds_from_sample(df, m, k, dim, id_col, vec_col)[1]
 
 
 def ivf_pq_seeds_from_sample(
@@ -864,15 +783,13 @@ def ivf_pq_seeds_from_sample(
     called with the same k; a composition that needs both (the ivf_pq_*
     serve/eval queries) pays two identical driver jobs for it (r6).
     Returns (centroids, codebooks), bit-identical to calling the two
-    single-table helpers."""
+    single-table helpers. The centroids and the codebooks share the one
+    ``k``: k coarse cells AND k codewords per subquantizer."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
-    rows = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.encode(F.col("id").cast("string"), "utf-8")), F.col("id"))
-        .limit(k)
-        .collect()
+    rows = _md5_seeds(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), k
     )
     cents = [(i, [float(x) for x in r.v]) for i, r in enumerate(rows)]
     cbs = [
@@ -1212,7 +1129,7 @@ def ivf_pq_index(
     on the query path."""
     codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
     assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col, method="join")
+        ivf_assign(corpus, centroids, id_col, vec_col)
         .select(F.col("id").alias("neighbor_id"), "centroid_id")
     )
     return codes.withColumnRenamed("id", "neighbor_id").join(
@@ -1356,7 +1273,6 @@ def semdedup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs, the SemDeDup candidate rule
     (Abbas et al. 2023, arXiv:2303.09540): assign every vector to its
@@ -1378,7 +1294,7 @@ def semdedup_pairs(
     — 3× less per-pair arithmetic than dot/(|a|·|b|), and the pair side
     of the shuffle carries unit vectors it would carry anyway.
     """
-    v = _semdedup_member_table(df, centroids, id_col, vec_col, method)
+    v = _semdedup_member_table(df, centroids, id_col, vec_col)
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(
         b,
@@ -1401,15 +1317,13 @@ def _semdedup_member_table(
     centroids: list[tuple[int, list[float]]],
     id_col: str,
     vec_col: str,
-    method: str,
 ) -> DataFrame:
     """Checkpointed (id, vn, centroid_id, ccos) member table behind the
     SemDeDup family: nearest-cell assignment + L2 normalization,
     materialized ONCE before the within-cell self-join — both join sides
     would otherwise re-run (and re-codegen) the assignment+normalization
-    subtree; with literal centroid expressions that is the dominant
-    compile cost of the whole operator."""
-    asg = ivf_assign(df, centroids, id_col, vec_col, method=method).select(
+    subtree."""
+    asg = ivf_assign(df, centroids, id_col, vec_col).select(
         F.col("id"),
         "centroid_id",
         F.col("cos").alias("ccos"),  # already rounded to 6 by ivf_assign
@@ -1440,7 +1354,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_iters: int = 20,
-    method: str = "auto",
 ) -> DataFrame:
     """SemDeDup semantic deduplication: k-means clusters → within-cluster
     cosine pairs → connected components → keep, per duplicate group, the
@@ -1468,7 +1381,7 @@ def semdedup(
     # (id, ccos) side serves BOTH the self-join and the keeper rule, so
     # the old pairs-union → groupBy(any_value) re-derivation of member
     # ccos (one extra aggregation job) disappears (r6)
-    v = _semdedup_member_table(df, centroids, id_col, vec_col, method)
+    v = _semdedup_member_table(df, centroids, id_col, vec_col)
     a, b = v.alias("a"), v.alias("b")
     cos = _dot(F.col("a.vn"), F.col("b.vn"))
     pairs = (
@@ -1511,7 +1424,6 @@ def ann_recall(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> DataFrame:
     """Recall@k of IVF probe search measured against exact brute force —
     the standing quality diagnostic every ANN deployment needs before
@@ -1528,7 +1440,7 @@ def ann_recall(
     """
     approx = ivf_search(
         corpus, queries, centroids, k=k, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col, method=method,
+        id_col=id_col, vec_col=vec_col,
     )
     return _recall_vs_exact(approx, corpus, queries, k, id_col, vec_col)
 
@@ -2051,13 +1963,15 @@ def mmr_select(
         )
     if id_type in ("string", "int", "bigint"):
         # literal local relation — no Python-RDD scan downstream
-        def _lit(v, t):
-            if t == "string":
-                return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
-            return f"{int(v)}L" if t == "bigint" else str(int(v))
+        from ..localrel import _lit
+
+        def _id_lit(v):
+            if id_type == "string":
+                return _lit(v)
+            return f"{int(v)}L" if id_type == "bigint" else str(int(v))
 
         vals = ", ".join(
-            f"({_lit(i, id_type)}, {int(r)}L, {int(o)})" for i, r, o in out_rows
+            f"({_id_lit(i)}, {int(r)}L, {int(o)})" for i, r, o in out_rows
         )
         return spark.sql(
             f"SELECT * FROM VALUES {vals} AS t(`{id_col}`, `{rel_col}`, "

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..localrel import _lit
 from ..search.analysis import tokens_expr
 
 #: BPE-ish pre-tokenizer: letter runs | digit runs | punctuation runs —
@@ -870,12 +871,6 @@ def bpe_train(
 _MERGE_CKPT_EVERY = 4
 
 
-def _sql_str(v: str) -> str:
-    """SQL string literal of a tokenizer symbol (tokens are word chars by
-    the shared TOKEN_PATTERN; quotes/backslashes escaped defensively)."""
-    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 def _values_steps_df(spark, rows, cols_sql: str, empty_schema: str) -> DataFrame:
     """A JVM-local (LocalRelation) steps table from driver-collected
     winner rows — collect/union of these is plan-time work, no Python-RDD
@@ -884,7 +879,7 @@ def _values_steps_df(spark, rows, cols_sql: str, empty_schema: str) -> DataFrame
         return spark.createDataFrame([], empty_schema)
     vals = ", ".join(
         "(" + ", ".join(
-            _sql_str(v) if isinstance(v, str) else f"{int(v)}L"
+            _lit(v) if isinstance(v, str) else f"{int(v)}L"
             if i in (4, 5, 6, 7) else str(int(v))
             for i, v in enumerate(r)
         ) + ")"
@@ -897,11 +892,10 @@ def _apply_merge_literal(vocab: DataFrame, l: str, r: str) -> DataFrame:
     """Re-segment a (wc, s) vocab state with ONE merge (l, r) bound as
     SQL literals — the :func:`bpe_apply` fold, shared by the training
     loops so the 1-row winner never needs a crossJoin/broadcast."""
-    ln, rn = l.replace("'", "''"), r.replace("'", "''")
     fold = (
         _BPE_APPLY_EXPR.replace("__syms", "__s_arr")
-        .replace("__l", f"'{ln}'")
-        .replace("__r", f"'{rn}'")
+        .replace("__l", _lit(l))
+        .replace("__r", _lit(r))
     )
     return vocab.select("wc", F.split("s", " ").alias("__s_arr")).select(
         "wc", F.expr(fold).alias("s")

@@ -100,23 +100,6 @@ def rank_expr(tokens: Column, terms: list[str]) -> Column:
     )
 
 
-def trigram_sim_from_grams(grams: Column | str, query: str) -> Column:
-    """pg_trgm similarity from a *materialized* ``grams`` array column.
-
-    PLAN-SHAPE: use this (with :func:`with_search_columns`) whenever the
-    text is more than a few tokens — :func:`trigram_sim_expr` inlines the
-    gram construction, and interpreted HOF lambdas re-evaluate the inline
-    ``lower(text)`` once per array element (quadratic in text length).
-    """
-    g = F.col(grams) if isinstance(grams, str) else grams
-    q = query.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(max(0, len(q) - 2))})
-    q_lit = F.array(*[F.lit(x) for x in q_grams]) if q_grams else F.array().cast("array<string>")
-    inter = F.size(F.array_intersect(g, q_lit))
-    union = F.size(F.array_union(g, q_lit))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
 def trigram_sim_udf(query: str):
     """Arrow-batched pandas-UDF trigram similarity for DOCUMENT-LENGTH text.
 
@@ -152,8 +135,8 @@ def trigram_sim_expr(col: Column | str, query: str) -> Column:
     """pg_trgm-style similarity: Jaccard of 3-gram sets vs ``query``.
 
     Inline form — fine for short strings; for document-length text use
-    :func:`trigram_sim_from_grams` over ``with_search_columns`` output
-    (see its plan-shape note).
+    :func:`trigram_sim_udf` (see its cost note), as ``search_documents``
+    does.
     """
     grams = trigrams_expr(col)
     q = query.lower()

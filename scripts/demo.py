@@ -279,7 +279,7 @@ def main() -> None:
     from ocr_search_spark.ops.dsir import dsir_select
     from ocr_search_spark.ops.similarity import semdedup
 
-    kept_vecs = semdedup(vecs, cents, threshold=0.9, method="join")
+    kept_vecs = semdedup(vecs, cents, threshold=0.9)
     print(f"semdedup survivors: {kept_vecs.count()} / {vecs.count()}")
     target = content.filter(F.col("doc_id").substr(-1, 1) < "3")
     picked = dsir_select(content, target, n=10, id_col="doc_id",

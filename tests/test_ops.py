@@ -1116,60 +1116,69 @@ class TestIvf:
         res2 = ivf_search(emb, q, cents, k=5, n_probe=2).collect()
         assert res2[0].neighbor_id == 7
 
-    def test_join_path_bit_identical_to_literal(self, emb):
-        """The broadcast-join assignment/probe strategy must be
-        bit-identical to the literal-expression strategy (same fold order,
-        same struct-max tie-break) — it's the same operator at a different
-        physical shape, not an approximation."""
+    @staticmethod
+    def _np_assign(emb, cents):
+        """Independent reference: numpy cosine to every centroid, argmax
+        with ties to the larger cid; returns ({id: (cid, cos)}, vectors)."""
+        rows = emb.orderBy("vec_id").collect()
+        vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in rows}
+        out = {}
+        for i, v in vecs.items():
+            best = max(
+                (float(np.dot(v, c) / (np.linalg.norm(v) * np.linalg.norm(c))), cid)
+                for cid, c in cents
+            )
+            out[i] = (best[1], round(best[0], 6))
+        return out, vecs
+
+    def test_assign_matches_numpy_argmax(self, emb):
         from ocr_search_spark.ops.similarity import (
             ivf_assign,
             ivf_centroids_from_sample,
-            ivf_search,
         )
 
         cents = ivf_centroids_from_sample(emb, k=8)
-        lit = sorted(map(tuple, ivf_assign(emb, cents, method="literal").collect()))
-        jn = sorted(map(tuple, ivf_assign(emb, cents, method="join").collect()))
-        assert lit == jn
-
-        q = emb.filter(F.col("vec_id") < 5)
-        s_lit = sorted(
-            map(tuple, ivf_search(emb, q, cents, k=5, n_probe=3, method="literal").collect())
-        )
-        s_jn = sorted(
-            map(tuple, ivf_search(emb, q, cents, k=5, n_probe=3, method="join").collect())
-        )
-        assert s_lit == s_jn
+        # cid 7 duplicates cid 0: its members tie exactly, larger cid wins
+        cents = cents[:7] + [(7, cents[0][1])]
+        ref, _ = self._np_assign(emb, cents)
+        got = {r.id: (r.centroid_id, r.cos) for r in ivf_assign(emb, cents).collect()}
+        assert got == ref
+        assert 7 in {cid for cid, _ in got.values()}
+        assert 0 not in {cid for cid, _ in got.values()}
 
     def test_large_k_uses_broadcast_join_plan(self, emb, spark):
-        """At production cell counts the auto strategy must be the
-        broadcast join (plan size independent of k): BroadcastExchange in
-        the plan, no k-wide literal projection."""
+        """At production cell counts the assignment is a broadcast join
+        (plan size independent of k): BroadcastExchange in the plan, no
+        k-wide literal projection."""
         from ocr_search_spark.ops.similarity import ivf_assign
 
         # k=256 synthetic centroids (> _LITERAL_CELL_LIMIT)
         rng = np.random.RandomState(7)
         cents = [(i, [float(x) for x in rng.rand(16)]) for i in range(256)]
-        df = ivf_assign(emb, cents)  # auto -> join
+        df = ivf_assign(emb, cents)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan
         out = {r.id: r.centroid_id for r in df.collect()}
         assert len(out) == 60 and set(out.values()) <= set(range(256))
 
-    def test_refine_join_matches_literal(self, emb):
+    def test_refine_matches_numpy_cell_means(self, emb):
         from ocr_search_spark.ops.similarity import (
             ivf_centroids_from_sample,
             ivf_refine,
         )
 
         cents = ivf_centroids_from_sample(emb, k=8)
-        r_lit = ivf_refine(emb, cents, iters=1, method="literal")
-        r_jn = ivf_refine(emb, cents, iters=1, method="join")
-        assert [cid for cid, _ in r_lit] == [cid for cid, _ in r_jn]
-        for (_, a), (_, b) in zip(r_lit, r_jn):
-            # per-dim means: float partial-sum order may differ between the
-            # two shuffle shapes — compare at oracle rounding precision
-            assert all(abs(x - y) < 1e-9 for x, y in zip(a, b))
+        ref, vecs = self._np_assign(emb, cents)
+        want = dict(cents)  # empty cells keep their previous centroid
+        for cid in {c for c, _ in ref.values()}:
+            want[cid] = np.mean(
+                [vecs[i] for i, (c, _) in ref.items() if c == cid], axis=0
+            ).tolist()
+        got = ivf_refine(emb, cents, iters=1)
+        assert [cid for cid, _ in got] == sorted(want)
+        for cid, vec in got:
+            # float partial-sum order differs from numpy's: oracle precision
+            assert all(abs(x - y) < 1e-9 for x, y in zip(vec, want[cid]))
 
 
 class TestDecontaminate:
@@ -3378,26 +3387,6 @@ class TestReviewRegressions3:
         content = {r.doc_id: r.content for r in spark.read.parquet(store.content_path).collect()}
         assert set(content) == {"full", "hollow"}  # no row loss
         assert content["hollow"] == ""
-
-    def test_candidate_only_verification_same_pairs(self, spark):
-        """verify_candidates_only=True (the production scope knob) must
-        produce exactly the same verified pairs as the corpus-wide
-        default."""
-        from ocr_search_spark.ops.dedup import verified_near_dup_pairs
-
-        rows = [
-            ("a", "alpha beta gamma delta epsilon zeta eta theta"),
-            ("b", "alpha beta gamma delta epsilon zeta eta iota"),
-            ("c", "completely different words in this one here"),
-            ("d", "alpha beta gamma delta epsilon zeta eta theta"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id string, text string")
-        kw = dict(threshold=0.5, n_hashes=8, band_size=2)
-        full = {(r.a_id, r.b_id) for r in verified_near_dup_pairs(
-            df, "doc_id", "text", **kw).collect()}
-        cand = {(r.a_id, r.b_id) for r in verified_near_dup_pairs(
-            df, "doc_id", "text", verify_candidates_only=True, **kw).collect()}
-        assert full == cand and ("a", "d") in full
 
 
 class TestUrlCanon:
